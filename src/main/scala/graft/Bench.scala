@@ -401,19 +401,7 @@ object Bench {
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100").toDouble
     def budgetLeft: Double = budgetSec - elapsedSec
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        // events.parquet carries ns timestamps: read them as long during
-        // the cache rewrite exactly as the queries themselves do
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def newSession(): SparkSession = GraftSession.local(cpus.toInt)
     var spark = newSession()
     // One executor OOM (e.g. an under-provisioned heap on the 100x
     // sweep) stops the local-mode SparkContext; without this guard

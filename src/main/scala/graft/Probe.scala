@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop probe: time queries from the registry against any parquet
   * dir (the bench cache, the sf1 synth, a raw sf dir) and optionally
@@ -15,17 +14,8 @@ object Probe {
     val explain = args.contains("--explain")
     val runs = args.sliding(2).collectFirst {
       case Array("--runs", n) => n.toInt }.getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // --conf k=v pairs land as session confs (e.g.
-    // --conf spark.graft.scanStorage=MEMORY_AND_DISK_SER)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // --conf k=v pairs land as session confs
     args.sliding(2).collect { case Array("--conf", kv) => kv }
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
@@ -66,17 +56,21 @@ object Probe {
                 sc.stageInfo.name.takeWhile(_ != '(').trim))
           }
         })
+    // materialize the whole result like the benchmark does: count()
+    // lets Catalyst prune Window, Sort and unused aggregates
+    def run(q: org.apache.spark.sql.DataFrame): Unit =
+      q.write.format("noop").mode("overwrite").save()
     names.foreach { n =>
       if (explain) {
         val q = SparkEntry.queries(n)(spark, dir)
-        q.count() // run once so AQE settles into the final plan
+        run(q) // run once so AQE settles into the final plan
         println(s"== $n ==")
         println(q.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       }
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, dir).count()
+        run(SparkEntry.queries(n)(spark, dir))
         val t = (System.nanoTime() - t0) / 1e9
         graft.functions.ScanFns.unpersistScans()
         // same per-run hygiene as Bench.time1: operators that persist
@@ -88,7 +82,7 @@ object Probe {
       println(f"[probe] $n min=${times.min}%.3f runs=${times.map(t => f"$t%.3f").mkString(",")}")
       if (showStages) {
         stageLog.clear()
-        SparkEntry.queries(n)(spark, dir).count()
+        run(SparkEntry.queries(n)(spark, dir))
         Thread.sleep(500) // listener events are async
         import scala.jdk.CollectionConverters._
         val st = stageLog.asScala.toSeq.sortBy(_._1)

@@ -68,9 +68,9 @@ object QueriesOps {
     * lose precision at 2026 epoch-nanos) and, in newer testdata drops,
     * plain TIMESTAMP(MICROS) (arrives as timestamp_ntz). Dispatch on
     * the READ schema so both layouts normalize to the same
-    * session-TZ timestamp column. */
+    * session-TZ timestamp column. The NANOS layout needs the session
+    * built with the conf on (GraftSession.local sets it). */
   private def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -243,7 +243,7 @@ object Tidyr {
     * "downup"/"updown" chain the two scans. Every selected column
     * fills in the same passes; no single-partition window anywhere in
     * the plan. Cost: one sort + two streamed passes per direction (see
-    * the ScanFns persist contract for the storage knob).
+    * the ScanFns persist contract).
     *
     * `order` columns must be PLAIN expressions (no .asc/.desc — both
     * traversal directions are derived here), and must be a total order

@@ -2,11 +2,15 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
+import scala.collection.mutable.{ArrayBuffer, ArrayDeque}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.InternalRowBridge
-import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed UNGROUPED cumulative aggregates (base/cum.py at
@@ -16,12 +20,16 @@ import org.apache.spark.storage.StorageLevel
   * prefix scan instead:
   *
   *  1. range-partitioned sort on the declared total order;
-  *  2. one pass computing each partition's partial aggregate —
-  *     #partitions rows to the driver (the same documented tiny
-  *     driver step as iterative-graph convergence counts, NOT a data
-  *     collect);
-  *  3. broadcast the per-partition prefix offsets and stream each
-  *     partition once, emitting the running value per row.
+  *  2. one pass computing each partition's summary (partial
+  *     aggregate, boundary values) — #partitions rows to the driver
+  *     (the same documented tiny driver step as iterative-graph
+  *     convergence counts, NOT a data collect), folded there into
+  *     each partition's carry-in;
+  *  3. broadcast the carries and stream each partition once,
+  *     emitting the running value per row.
+  *
+  * Every scan below is that one algorithm ([[twoPhaseScan]]) with its
+  * own summary, carry fold and emit loop.
   *
   * Association caveat: a two-phase DOUBLE sum ((p0)+(p1))+… is not
   * bit-identical to a sequential left fold, so [[withCumsum]]
@@ -31,14 +39,16 @@ import org.apache.spark.storage.StorageLevel
   * max/min are associative and exact in double already.
   *
   * PERSIST CONTRACT: the scan is inherently 2-pass, so the sorted rows
-  * are persisted across both passes at `storage` (default
-  * MEMORY_AND_DISK — hot partitions stay in memory, the overflow
-  * spills). At 100 TB that persist is a full-dataset cache: budget
-  * executor storage for it, or pass `StorageLevel.DISK_ONLY` for wide
-  * frames so the scan costs one extra disk round-trip instead of
-  * evicting the working set. The alternative — recomputing the sort
-  * for pass 2 — costs a second full shuffle; persisting is strictly
-  * cheaper whenever the cluster has the disk.
+  * are persisted at MEMORY_AND_DISK across both passes — hot
+  * partitions stay in memory, the overflow spills; at 100 TB that is a
+  * full-dataset cache, so budget executor storage and disk for it.
+  * The alternative — recomputing the sort for pass 2 — costs a second
+  * full shuffle. Each scan is EAGER like `Materialize.cp`: the call
+  * itself runs the range sort's sampling job (under AQE also its
+  * shuffle stage) and the summary pass; only the emit pass waits for
+  * the returned frame's action. The
+  * persist outlives that action and is released only by
+  * [[unpersistScans]].
   *
   * PROJECT FIRST: the sorted rows carry the input frame's FULL schema
   * through the shuffle, the persist, and both Row-level passes — a
@@ -115,19 +125,16 @@ object ScanFns {
   /** Running sum of `x` over the total order `order`, exact-decimal
     * accumulation, null-skipping like `sum() OVER` (null until the
     * first non-null value). */
-  def withCumsum(df: DataFrame, x: Column, order: Seq[Column], as: String,
-                 storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    withCumulatives(df, Seq((x, SumOp, as)), order, storage)
+  def withCumsum(df: DataFrame, x: Column, order: Seq[Column], as: String): DataFrame =
+    withCumulatives(df, Seq((x, SumOp, as)), order)
 
   /** Running max over the total order (associative — plain doubles). */
-  def withCummax(df: DataFrame, x: Column, order: Seq[Column], as: String,
-                 storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    withCumulatives(df, Seq((x, MaxOp, as)), order, storage)
+  def withCummax(df: DataFrame, x: Column, order: Seq[Column], as: String): DataFrame =
+    withCumulatives(df, Seq((x, MaxOp, as)), order)
 
   /** Running min over the total order. */
-  def withCummin(df: DataFrame, x: Column, order: Seq[Column], as: String,
-                 storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    withCumulatives(df, Seq((x, MinOp, as)), order, storage)
+  def withCummin(df: DataFrame, x: Column, order: Seq[Column], as: String): DataFrame =
+    withCumulatives(df, Seq((x, MinOp, as)), order)
 
   /** N running aggregates in ONE scan: a single range-partitioned sort
     * and two streamed passes cover every (input, op, name) triple —
@@ -137,59 +144,43 @@ object ScanFns {
     * slower than fused). Use this whenever a verb computes several
     * whole-frame cumulatives over the same order. */
   def withCumulatives(df: DataFrame, ops: Seq[(Column, ScanOp, String)],
-                      order: Seq[Column],
-                      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                      order: Seq[Column]): DataFrame = {
     require(order.nonEmpty, "ungrouped cum* needs a declared total order")
     require(ops.nonEmpty, "withCumulatives: no aggregates given")
     requireFreshNames(df, ops.map(_._3))
     val n = ops.length
-    val tmp = freshTempNames(df, "__sx", n)
-    val inCols = df.columns.map(df.col) ++
-      ops.zipWithIndex.map { case ((x, _, _), i) => x.cast("double").as(tmp(i)) }
-    val sorted = df.select(inCols.toIndexedSeq: _*).orderBy(order: _*)
-    val xi = Array.tabulate(n)(i => sorted.schema.fieldIndex(tmp(i)))
+    val sorted = sortedWithTemps(df, "__sx", ops.map(_._1.cast("double")), order)
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
+    val base = dts.length - n
     val kernels = ops.map(_._2).toArray
-    val rdd = sortedInternal(sorted, storage)
-    val totals: Array[Array[Any]] = rdd.mapPartitionsWithIndex { (i, it) =>
-      val acc = Array.tabulate[Any](n)(j => kernels(j).zero)
-      it.foreach { r =>
-        var j = 0
-        while (j < n) {
-          if (!r.isNullAt(xi(j))) acc(j) = kernels(j).step(acc(j), r.getDouble(xi(j)))
-          j += 1
-        }
-      }
-      Iterator.single((i, acc))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(Array.tabulate[Any](n)(j => kernels(j).zero)) {
-      (a, b) => Array.tabulate[Any](n)(j => kernels(j).merge(a(j), b(j)))
-    }
-    val bc = sorted.sparkSession.sparkContext.broadcast(offsets)
-    val width = sorted.schema.length
-    val outRows = rdd.mapPartitionsWithIndex { (i, it) =>
-      val acc = bc.value(i).clone()
-      it.map { r =>
-        // catalyst values copied straight through — no per-row
-        // external-Row round trip (see sortedInternal)
-        val out = new Array[Any](width)
-        var c = 0
-        while (c < width - n) {
-          out(c) = if (r.isNullAt(c)) null else r.get(c, dts(c)); c += 1
-        }
-        var j = 0
-        while (j < n) {
-          if (!r.isNullAt(xi(j))) acc(j) = kernels(j).step(acc(j), r.getDouble(xi(j)))
-          out(width - n + j) = kernels(j).emit(acc(j))
-          j += 1
-        }
-        new GenericInternalRow(out): InternalRow
+    def step(acc: Array[Any], r: InternalRow): Unit = {
+      var j = 0
+      while (j < n) {
+        if (!r.isNullAt(base + j)) acc(j) = kernels(j).step(acc(j), r.getDouble(base + j))
+        j += 1
       }
     }
     val outSchema = StructType(
-      sorted.schema.fields.dropRight(n) ++
+      sorted.schema.fields.take(base) ++
         ops.map { case (_, _, as) => StructField(as, DoubleType, nullable = true) })
-    InternalRowBridge.fromInternalRdd(sorted.sparkSession, outRows, outSchema)
+    twoPhaseScan(sorted, outSchema) { it =>
+      val acc = Array.tabulate[Any](n)(j => kernels(j).zero)
+      it.foreach(step(acc, _))
+      acc
+    } { totals =>
+      totals.scanLeft(Array.tabulate[Any](n)(j => kernels(j).zero)) {
+        (a, b) => Array.tabulate[Any](n)(j => kernels(j).merge(a(j), b(j)))
+      }
+    } { (carry, it) =>
+      val acc = carry.clone()
+      it.map { r =>
+        val out = copyRow(r, dts, base, base + n)
+        step(acc, r)
+        var j = 0
+        while (j < n) { out(base + j) = kernels(j).emit(acc(j)); j += 1 }
+        new GenericInternalRow(out)
+      }
+    }
   }
 
   /** Output names must be fresh and distinct — a collision would
@@ -202,50 +193,61 @@ object ScanFns {
       s"scan: output name(s) already exist in the frame: ${clash.mkString(", ")}")
   }
 
-  /** Internal temp names guaranteed fresh against the input schema: a
-    * user column literally named __sx0/__rx0/__ck0 would otherwise
-    * duplicate the temp, make fieldIndex resolve to the FIRST
-    * occurrence, and silently corrupt the scan (read the wrong column,
-    * dropRight a real one). Underscores are prepended until no input
-    * column shares the prefix. */
-  private def freshTempNames(df: DataFrame, base: String, n: Int): IndexedSeq[String] = {
-    var p = base
+  /** `df` plus `xs` as trailing temp columns, sorted on `order`: temp
+    * j sits at index `df.columns.length + j`. Temp names are fresh
+    * against the input schema: a user column literally named
+    * __sx0/__rx0/__ck0 would otherwise share a temp's name, making any
+    * reference to that name in the sorted frame (an order column, say)
+    * ambiguous. Underscores are prepended until no input column shares
+    * the prefix. */
+  private def sortedWithTemps(df: DataFrame, prefix: String, xs: Seq[Column],
+                              order: Seq[Column]): DataFrame = {
+    var p = prefix
     while (df.columns.exists(_.startsWith(p))) p = "_" + p
-    (0 until n).map(i => s"$p$i")
+    df.select((df.columns.map(df.col) ++ xs.zipWithIndex.map { case (x, j) => x.as(s"$p$j") })
+        .toIndexedSeq: _*)
+      .orderBy(order: _*)
+  }
+
+  /** The first `n` catalyst values of `r` in a fresh `width`-slot output
+    * row (slots past `n` are the scan's to fill) — values copied
+    * straight through, no per-row external-Row round trip. */
+  private def copyRow(r: InternalRow, dts: Array[DataType], n: Int, width: Int): Array[Any] = {
+    val out = new Array[Any](width)
+    var c = 0
+    while (c < n) { out(c) = if (r.isNullAt(c)) null else r.get(c, dts(c)); c += 1 }
+    out
   }
 
   /** RDDs persisted by in-flight scans, so cleanup is scoped to THIS
     * family instead of a global getPersistentRDDs sweep that would
     * clobber unrelated user caches. */
-  private val scanPersists =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.rdd.RDD[_]]()
+  private val scanPersists = java.util.concurrent.ConcurrentHashMap.newKeySet[RDD[_]]()
 
-  private def registerPersist[T](rdd: org.apache.spark.rdd.RDD[T],
-                                 storage: StorageLevel): org.apache.spark.rdd.RDD[T] = {
-    // session-wide override for the scan family's two-pass persist
-    // (spark.graft.scanStorage = MEMORY_AND_DISK_SER / DISK_ONLY /
-    // ...): deployments sizing executor storage for 10x+ frames can
-    // repoint every scan without threading the parameter through each
-    // verb. Applies only where the caller left the library default.
-    val effective =
-      if (storage == StorageLevel.MEMORY_AND_DISK)
-        org.apache.spark.sql.SparkSession.active.conf
-          .getOption("spark.graft.scanStorage")
-          .map(StorageLevel.fromString).getOrElse(storage)
-      else storage
-    rdd.persist(effective)
-    scanPersists.add(rdd)
-    rdd
+  /** The two-phase prefix scan every public scan here runs:
+    *  1. the sorted plan's CATALYST rows, copied (toRdd reuses buffers)
+    *     and persisted at MEMORY_AND_DISK for both passes, registered
+    *     for [[unpersistScans]];
+    *  2. `summarize` once per partition, collected in partition order;
+    *  3. `carries` folds those summaries on the driver into one
+    *     carry-in per partition, broadcast once;
+    *  4. `emit` streams each partition from its carry-in.
+    * Staying on InternalRow end to end — compact UnsafeRow bytes in the
+    * cache, no boxed external Rows — cut the sf1 scan queries ~30-40% vs
+    * the Dataset.rdd bridge, which deserializes every row on the way out
+    * AND re-serializes the assembled output rows on the way back in. */
+  private def twoPhaseScan[S: ClassTag, C: ClassTag](sorted: DataFrame, outSchema: StructType)(
+      summarize: Iterator[InternalRow] => S)(
+      carries: Array[S] => Array[C])(
+      emit: (C, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
+    val rows = InternalRowBridge.toInternalRdd(sorted).map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    scanPersists.add(rows)
+    val summaries = rows.mapPartitions(it => Iterator.single(summarize(it))).collect()
+    val bc = sorted.sparkSession.sparkContext.broadcast(carries(summaries))
+    val out = rows.mapPartitionsWithIndex((i, it) => emit(bc.value(i), it))
+    InternalRowBridge.fromInternalRdd(sorted.sparkSession, out, outSchema)
   }
-
-  /** The sorted plan's CATALYST rows, copied (toRdd reuses buffers) and
-    * persisted for the scan's two passes. Staying on InternalRow end to
-    * end — compact UnsafeRow bytes in the cache, no boxed external Rows
-    * — cut the sf1 scan queries ~30-40% vs the Dataset.rdd bridge,
-    * which deserializes every row on the way out AND re-serializes the
-    * assembled output rows on the way back in. */
-  private def sortedInternal(sorted: DataFrame, storage: StorageLevel) =
-    registerPersist(InternalRowBridge.toInternalRdd(sorted).map(_.copy()), storage)
 
   /** Drop every RDD the scan family has persisted (and nothing else).
     * The scans are 2-pass, so the sorted rows stay cached for the
@@ -269,24 +271,21 @@ object ScanFns {
     * carry-in (id so far, previous key) broadcasts and every partition
     * streams once. */
   def withConsecutiveId(df: DataFrame, keys: Seq[Column], order: Seq[Column],
-                        as: String,
-                        storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                        as: String): DataFrame = {
     require(order.nonEmpty, "ungrouped consecutive_id needs a declared total order")
     require(keys.nonEmpty, "consecutive_id: no key columns")
     requireFreshNames(df, Seq(as))
     val n = keys.length
-    val tmp = freshTempNames(df, "__ck", n)
-    val inCols = df.columns.map(df.col) ++
-      keys.zipWithIndex.map { case (k, i) => k.as(tmp(i)) }
-    val sorted = df.select(inCols.toIndexedSeq: _*).orderBy(order: _*)
-    val ki = Array.tabulate(n)(i => sorted.schema.fieldIndex(tmp(i)))
+    val sorted = sortedWithTemps(df, "__ck", keys, order)
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
+    val base = dts.length - n
     // catalyst key values: UTF8String/Long/... — equality and driver
     // serialization are both value-based, so the summaries travel fine
     def keyOf(r: InternalRow): Seq[Any] =
-      ki.map(i => if (r.isNullAt(i)) null else r.get(i, dts(i))).toSeq
-    val rdd = sortedInternal(sorted, storage)
-    val sums = rdd.mapPartitionsWithIndex { (i, it) =>
+      (base until base + n).map(i => if (r.isNullAt(i)) null else r.get(i, dts(i)))
+    val outSchema = StructType(
+      sorted.schema.fields.take(base) :+ StructField(as, LongType, nullable = false))
+    twoPhaseScan(sorted, outSchema) { it =>
       var first: Option[Seq[Any]] = None
       var last: Option[Seq[Any]] = None
       var changes = 0L
@@ -296,44 +295,33 @@ object ScanFns {
         else if (k != last.get) changes += 1
         last = Some(k)
       }
-      Iterator.single((i, (first, last, changes)))
-    }.collect().sortBy(_._1).map(_._2)
-    // sequential replay over the partition summaries: carry-in for
-    // partition i is (id of its first row assuming no change at the
-    // boundary, key of the last row before it)
-    val offsets = new Array[(Long, Option[Seq[Any]])](sums.length)
-    var id = 1L
-    var prev: Option[Seq[Any]] = None
-    for (i <- sums.indices) {
-      offsets(i) = (id, prev)
-      val (f, l, c) = sums(i)
-      if (f.nonEmpty) {
-        if (prev.nonEmpty && f.get != prev.get) id += 1
-        id += c
-        prev = l
+      (first, last, changes)
+    } { sums =>
+      // sequential replay over the partition summaries: carry-in for
+      // partition i is (id of its first row assuming no change at the
+      // boundary, key of the last row before it)
+      var id = 1L
+      var prev: Option[Seq[Any]] = None
+      sums.map { case (f, l, c) =>
+        val carry = (id, prev)
+        if (f.nonEmpty) {
+          if (prev.nonEmpty && f.get != prev.get) id += 1
+          id += c
+          prev = l
+        }
+        carry
       }
-    }
-    val bc = sorted.sparkSession.sparkContext.broadcast(offsets)
-    val width = sorted.schema.length
-    val outRows = rdd.mapPartitionsWithIndex { (i, it) =>
-      var (cur, prevK) = bc.value(i)
+    } { (carry, it) =>
+      var (cur, prevK) = carry
       it.map { r =>
         val k = keyOf(r)
         if (prevK.nonEmpty && k != prevK.get) cur += 1
         prevK = Some(k)
-        val out = new Array[Any](width - n + 1)
-        var c = 0
-        while (c < width - n) {
-          out(c) = if (r.isNullAt(c)) null else r.get(c, dts(c)); c += 1
-        }
-        out(width - n) = cur
-        new GenericInternalRow(out): InternalRow
+        val out = copyRow(r, dts, base, base + 1)
+        out(base) = cur
+        new GenericInternalRow(out)
       }
     }
-    val outSchema = StructType(
-      sorted.schema.fields.dropRight(n) :+
-        StructField(as, org.apache.spark.sql.types.LongType, nullable = false))
-    InternalRowBridge.fromInternalRdd(sorted.sparkSession, outRows, outSchema)
   }
 
   /** One rolling aggregate over the trailing-k frame: "sum" (exact
@@ -357,46 +345,18 @@ object ScanFns {
     * exact decimal so partition boundaries can't perturb association.
     * All specs share ONE sort + two passes, like [[withCumulatives]]. */
   def withRolling(df: DataFrame, specs: Seq[(Column, RollKind, String)], k: Int,
-                  order: Seq[Column],
-                  storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                  order: Seq[Column]): DataFrame = {
     require(order.nonEmpty, "ungrouped rolling needs a declared total order")
     require(specs.nonEmpty, "withRolling: no aggregates given")
     require(k >= 1, s"rolling window width must be >= 1 (got $k)")
     requireFreshNames(df, specs.map(_._3))
     val n = specs.length
-    val tmp = freshTempNames(df, "__rx", n)
-    val inCols = df.columns.map(df.col) ++
-      specs.zipWithIndex.map { case ((x, _, _), i) => x.cast("double").as(tmp(i)) }
-    val sorted = df.select(inCols.toIndexedSeq: _*).orderBy(order: _*)
-    val xi = Array.tabulate(n)(i => sorted.schema.fieldIndex(tmp(i)))
+    val sorted = sortedWithTemps(df, "__rx", specs.map(_._1.cast("double")), order)
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
+    val base = dts.length - n
     val kinds = specs.map(_._2).toArray
-    val rdd = sortedInternal(sorted, storage)
-    // pass 1: the last k-1 values (nullable) of each partition, per
-    // spec — short partitions pass their full contents so the walk
-    // below can look further back. Ring-buffered: O(1) per row, not a
-    // Vector reallocation per row.
-    val tails: Array[Array[Vector[Any]]] = rdd.mapPartitionsWithIndex { (i, it) =>
-      val buf = Array.fill(n)(scala.collection.mutable.ArrayDeque.empty[Any])
-      it.foreach { r =>
-        var j = 0
-        while (j < n) {
-          val v: Any = if (r.isNullAt(xi(j))) null else r.getDouble(xi(j))
-          buf(j).append(v)
-          if (buf(j).length > k - 1) buf(j).removeHead()
-          j += 1
-        }
-      }
-      Iterator.single((i, buf.map(_.toVector)))
-    }.collect().sortBy(_._1).map(_._2)
-    // carry(i) = last k-1 values before partition i (per spec)
-    val carries = new Array[Array[Vector[Any]]](tails.length)
-    var run = Array.fill(n)(Vector.empty[Any])
-    for (i <- tails.indices) {
-      carries(i) = run.map(identity)
-      run = Array.tabulate(n)(j => (run(j) ++ tails(i)(j)).takeRight(math.max(k - 1, 0)))
-    }
-    val bc = sorted.sparkSession.sparkContext.broadcast(carries)
+    def valAt(r: InternalRow, j: Int): Any =
+      if (r.isNullAt(base + j)) null else r.getDouble(base + j)
     def evalWindow(kind: RollKind, win: scala.collection.Seq[Any]): Any = {
       val vs = win.collect { case d: Double => d }
       kind match {
@@ -411,30 +371,46 @@ object ScanFns {
         case RollMax => if (vs.isEmpty) null else vs.max
       }
     }
-    val width = sorted.schema.length
-    val outRows = rdd.mapPartitionsWithIndex { (i, it) =>
-      val win = bc.value(i).map(c => scala.collection.mutable.ArrayDeque.from(c))
-      it.map { r =>
-        val out = new Array[Any](width)
-        var c = 0
-        while (c < width - n) {
-          out(c) = if (r.isNullAt(c)) null else r.get(c, dts(c)); c += 1
-        }
+    val outSchema = StructType(
+      sorted.schema.fields.take(base) ++
+        specs.map { case (_, _, as) => StructField(as, DoubleType, nullable = true) })
+    twoPhaseScan(sorted, outSchema) { it =>
+      // the last k-1 values (nullable) of the partition, per spec —
+      // short partitions pass their full contents so the fold below
+      // can look further back. Ring-buffered: O(1) per row, not a
+      // Vector reallocation per row.
+      val buf = Array.fill(n)(ArrayDeque.empty[Any])
+      it.foreach { r =>
         var j = 0
         while (j < n) {
-          val v: Any = if (r.isNullAt(xi(j))) null else r.getDouble(xi(j))
-          win(j).append(v)
-          if (win(j).length > k) win(j).removeHead()
-          out(width - n + j) = evalWindow(kinds(j), win(j))
+          buf(j).append(valAt(r, j))
+          if (buf(j).length > k - 1) buf(j).removeHead()
           j += 1
         }
-        new GenericInternalRow(out): InternalRow
+      }
+      buf.map(_.toVector)
+    } { tails =>
+      // carry(i) = last k-1 values before partition i (per spec)
+      var run = Array.fill(n)(Vector.empty[Any])
+      tails.map { tail =>
+        val carry = run
+        run = Array.tabulate(n)(j => (run(j) ++ tail(j)).takeRight(k - 1))
+        carry
+      }
+    } { (carry, it) =>
+      val win = carry.map(c => ArrayDeque.from(c))
+      it.map { r =>
+        val out = copyRow(r, dts, base, base + n)
+        var j = 0
+        while (j < n) {
+          win(j).append(valAt(r, j))
+          if (win(j).length > k) win(j).removeHead()
+          out(base + j) = evalWindow(kinds(j), win(j))
+          j += 1
+        }
+        new GenericInternalRow(out)
       }
     }
-    val outSchema = StructType(
-      sorted.schema.fields.dropRight(n) ++
-        specs.map { case (_, _, as) => StructField(as, DoubleType, nullable = true) })
-    InternalRowBridge.fromInternalRdd(sorted.sparkSession, outRows, outSchema)
   }
 
   /** Whole-frame lead/lag: `as` = the value of `x` from `n` rows BACK
@@ -448,9 +424,8 @@ object ScanFns {
     * halved b_lead_lag_u at sf1. Lead buffers |n| in-flight output
     * rows per task (O(|n| · row width) memory — the expected regime is
     * small |n|). */
-  def withShift(df: DataFrame, x: Column, n: Int, order: Seq[Column], as: String,
-                storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    withShifts(df, Seq((x, n, as)), order, storage)
+  def withShift(df: DataFrame, x: Column, n: Int, order: Seq[Column], as: String): DataFrame =
+    withShifts(df, Seq((x, n, as)), order)
 
   /** N whole-frame shifts FUSED into one scan — mixed lags and leads
     * over the same total order share the single sort and both passes
@@ -460,34 +435,32 @@ object ScanFns {
     * rows up to L = max lead depth behind it, so the task holds at
     * most L in-flight output rows (O(L · row width) memory — small-L
     * regime) plus |n| carry scalars per spec. */
-  def withShifts(df: DataFrame, specs: Seq[(Column, Int, String)], order: Seq[Column],
-                 storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+  def withShifts(df: DataFrame, specs: Seq[(Column, Int, String)],
+                 order: Seq[Column]): DataFrame = {
     require(order.nonEmpty, "ungrouped shift needs a declared total order")
     require(specs.nonEmpty, "withShifts: no shifts given")
     require(specs.forall(_._2 != 0), "shift: n must be non-zero")
     requireFreshNames(df, specs.map(_._3))
     val nSpec = specs.length
-    val tmp = freshTempNames(df, "__sh", nSpec)
-    val sorted = df.select((df.columns.map(df.col) ++
-        specs.zipWithIndex.map { case ((x, _, _), j) => x.as(tmp(j)) }).toIndexedSeq: _*)
-      .orderBy(order: _*)
-    val w = sorted.schema.length
-    val base = w - nSpec
-    val vi = Array.tabulate(nSpec)(j => sorted.schema.fieldIndex(tmp(j)))
+    val sorted = sortedWithTemps(df, "__sh", specs.map(_._1), order)
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
+    val w = dts.length
+    val base = w - nSpec
     val ns = specs.map(_._2).toArray
     val lagIdx = ns.indices.filter(j => ns(j) > 0).toArray
     val leadIdx = ns.indices.filter(j => ns(j) < 0).toArray
     val maxLead = leadIdx.map(j => -ns(j)).maxOption.getOrElse(0)
-    val rdd = sortedInternal(sorted, storage)
     def valAt(r: InternalRow, j: Int): Any =
-      if (r.isNullAt(vi(j))) null else r.get(vi(j), dts(vi(j)))
-    // pass 1: per spec, each partition's boundary values — tail |n| for
-    // lags, head |n| for leads (short partitions report what they have,
-    // so carries bridge across them)
-    val bounds: Array[Array[Vector[Any]]] = rdd.mapPartitionsWithIndex { (i, it) =>
-      val tails = Array.fill(nSpec)(scala.collection.mutable.ArrayDeque.empty[Any])
-      val heads = Array.fill(nSpec)(scala.collection.mutable.ArrayBuffer.empty[Any])
+      if (r.isNullAt(base + j)) null else r.get(base + j, dts(base + j))
+    val outSchema = StructType(sorted.schema.fields.take(base).toSeq ++
+      specs.zipWithIndex.map { case ((_, _, as), j) =>
+        StructField(as, dts(base + j), nullable = true) })
+    twoPhaseScan(sorted, outSchema) { it =>
+      // per spec, the partition's boundary values — tail |n| for lags,
+      // head |n| for leads (short partitions report what they have, so
+      // carries bridge across them)
+      val tails = Array.fill(nSpec)(ArrayDeque.empty[Any])
+      val heads = Array.fill(nSpec)(ArrayBuffer.empty[Any])
       it.foreach { r =>
         var j = 0
         while (j < nSpec) {
@@ -498,36 +471,30 @@ object ScanFns {
           j += 1
         }
       }
-      Iterator.single((i, Array.tabulate(nSpec)(j =>
-        if (ns(j) > 0) tails(j).toVector else heads(j).toVector)))
-    }.collect().sortBy(_._1).map(_._2)
-    // carry(i)(j): for lag j the last n values BEFORE partition i, for
-    // lead j the first |n| values AFTER it
-    val parts = bounds.length
-    val carries = Array.fill(parts)(new Array[Vector[Any]](nSpec))
-    for (j <- 0 until nSpec) {
-      if (ns(j) > 0) {
+      Array.tabulate(nSpec)(j => if (ns(j) > 0) tails(j).toVector else heads(j).toVector)
+    } { bounds =>
+      // carry(i)(j): for lag j the last n values BEFORE partition i, for
+      // lead j the first |n| values AFTER it
+      val parts = bounds.length
+      val carries = Array.fill(parts)(new Array[Vector[Any]](nSpec))
+      for (j <- 0 until nSpec) {
         var run = Vector.empty[Any]
-        for (i <- 0 until parts) {
-          carries(i)(j) = run; run = (run ++ bounds(i)(j)).takeRight(ns(j))
-        }
-      } else {
-        var run = Vector.empty[Any]
-        for (i <- (parts - 1) to 0 by -1) {
-          carries(i)(j) = run; run = (bounds(i)(j) ++ run).take(-ns(j))
-        }
+        if (ns(j) > 0)
+          for (i <- 0 until parts) {
+            carries(i)(j) = run; run = (run ++ bounds(i)(j)).takeRight(ns(j))
+          }
+        else
+          for (i <- (parts - 1) to 0 by -1) {
+            carries(i)(j) = run; run = (bounds(i)(j) ++ run).take(-ns(j))
+          }
       }
-    }
-    val bc = sorted.sparkSession.sparkContext.broadcast(carries)
-    val outRows = rdd.mapPartitionsWithIndex { (i, it) =>
-      val carry = bc.value(i)
+      carries
+    } { (carry, it) =>
       val deques = Array.tabulate(nSpec)(j =>
-        if (ns(j) > 0) scala.collection.mutable.ArrayDeque.from(carry(j)) else null)
-      val pending = scala.collection.mutable.ArrayDeque.empty[Array[Any]]
+        if (ns(j) > 0) ArrayDeque.from(carry(j)) else null)
+      val pending = ArrayDeque.empty[Array[Any]]
       val head = it.flatMap { r =>
-        val out = new Array[Any](w)
-        var c = 0
-        while (c < base) { out(c) = if (r.isNullAt(c)) null else r.get(c, dts(c)); c += 1 }
+        val out = copyRow(r, dts, base, w)
         // lag values are known the moment the row streams past
         for (j <- lagIdx) {
           out(base + j) =
@@ -570,10 +537,6 @@ object ScanFns {
       }
       head ++ drain
     }
-    val outSchema = StructType(sorted.schema.fields.dropRight(nSpec).toSeq ++
-      specs.zipWithIndex.map { case ((_, _, as), j) =>
-        StructField(as, dts(vi(j)), nullable = true) })
-    InternalRowBridge.fromInternalRdd(sorted.sparkSession, outRows, outSchema)
   }
 
   /** Whole-frame "fill down" — the running LAST NON-NULL value of each
@@ -584,15 +547,14 @@ object ScanFns {
     * so each partition contributes one value per column and the
     * carry-in broadcast is #partitions × #cols scalars. All columns
     * fill in ONE sort + two passes, not one scan per column. */
-  def withFillLast(df: DataFrame, cols: Seq[String], order: Seq[Column],
-                   storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+  def withFillLast(df: DataFrame, cols: Seq[String], order: Seq[Column]): DataFrame = {
     require(order.nonEmpty, "ungrouped fill needs a declared total order")
     require(cols.nonEmpty, "fill: no columns selected")
     val sorted = df.orderBy(order: _*)
     val idxs = cols.map(sorted.schema.fieldIndex).toArray
     val dts: Array[DataType] = sorted.schema.fields.map(_.dataType)
-    val rdd = sortedInternal(sorted, storage)
-    val partLast: Array[Array[Any]] = rdd.mapPartitionsWithIndex { (i, it) =>
+    val width = dts.length
+    twoPhaseScan(sorted, sorted.schema) { it =>
       val acc = Array.fill[Any](idxs.length)(null)
       it.foreach { r =>
         var j = 0
@@ -602,31 +564,24 @@ object ScanFns {
           j += 1
         }
       }
-      Iterator.single((i, acc))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partLast.scanLeft(Array.fill[Any](idxs.length)(null)) { (a, b) =>
-      Array.tabulate(idxs.length)(j => if (b(j) != null) b(j) else a(j))
-    }
-    val bc = sorted.sparkSession.sparkContext.broadcast(offsets)
-    val width = sorted.schema.length
-    val outRows = rdd.mapPartitionsWithIndex { (i, it) =>
-      val acc = bc.value(i).clone()
+      acc
+    } { partLast =>
+      partLast.scanLeft(Array.fill[Any](idxs.length)(null)) { (a, b) =>
+        Array.tabulate(idxs.length)(j => if (b(j) != null) b(j) else a(j))
+      }
+    } { (carry, it) =>
+      val acc = carry.clone()
       it.map { r =>
-        val vals = new Array[Any](width)
-        var c = 0
-        while (c < width) {
-          vals(c) = if (r.isNullAt(c)) null else r.get(c, dts(c)); c += 1
-        }
+        val vals = copyRow(r, dts, width, width)
         var j = 0
         while (j < idxs.length) {
           val v = vals(idxs(j))
           if (v != null) acc(j) = v else vals(idxs(j)) = acc(j)
           j += 1
         }
-        new GenericInternalRow(vals): InternalRow
+        new GenericInternalRow(vals)
       }
     }
-    InternalRowBridge.fromInternalRdd(sorted.sparkSession, outRows, sorted.schema)
   }
 
 }

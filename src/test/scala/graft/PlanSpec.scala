@@ -240,38 +240,6 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("scan persist StorageLevel is a knob: DISK_ONLY results are unchanged") {
-    import graft.functions.ScanFns
-    import org.apache.spark.storage.StorageLevel
-    val df = sqlDf("k" -> (1 to 100), "v" -> (1 to 100).map(_.toDouble))
-      .repartition(5)
-    def run(s: StorageLevel) =
-      ScanFns.withCumsum(df, col("v"), Seq(col("k").asc), "cs", s)
-        .orderBy("k").collect().map(_.getDouble(2)).toSeq
-    assert(run(StorageLevel.DISK_ONLY) == run(StorageLevel.MEMORY_AND_DISK))
-    def runFill(s: StorageLevel) =
-      ScanFns.withFillLast(
-        df.withColumn("v", when(col("k") % 7 === 0, col("v"))),
-        Seq("v"), Seq(col("k").asc), s)
-        .orderBy("k").collect().map(r => Option(r.get(1))).toSeq
-    assert(runFill(StorageLevel.DISK_ONLY) == runFill(StorageLevel.MEMORY_AND_DISK))
-    // the session-wide override repoints the library default (measured
-    // at sf1: MEMORY_AND_DISK_SER is a wash for the UnsafeRow cache —
-    // the knob exists for deployments that need DISK_ONLY wide frames)
-    spark.conf.set("spark.graft.scanStorage", "DISK_ONLY")
-    try {
-      val out = ScanFns.withCumsum(df, col("v"), Seq(col("k").asc), "cs")
-      assert(out.orderBy("k").collect().map(_.getDouble(2)).toSeq ==
-        run(StorageLevel.MEMORY_AND_DISK))
-      out.count() // keep the scan's persist alive to inspect its level
-      assert(spark.sparkContext.getPersistentRDDs.values
-        .exists(_.getStorageLevel == StorageLevel.DISK_ONLY))
-    } finally {
-      spark.conf.unset("spark.graft.scanStorage")
-      ScanFns.unpersistScans()
-    }
-  }
-
   test("ungrouped tied sliceMin/Max match the rank-window semantics (incl. ties)") {
     val df = sqlDf("v" -> Seq(1L, 1L, 2L, 3L, 3L, 3L, 9L))
     val got = df.graft.sliceMin(col("v"), 2, withTies = true).df
@@ -525,10 +493,19 @@ class PlanSpec extends SparkTestBase {
       .withColumn("cid", sum(when(row_number().over(ww) === 1 ||
         !(col("s") <=> lag(col("s"), 1).over(ww)), 1).otherwise(0)).over(w))
       .orderBy("k").collect().map(r => (3 to 6).map(i => Option(r.get(i)))).toSeq
-    for (parts <- Seq(1, 3, 17)) {
+    // the scan's range sort lands on spark.sql.shuffle.partitions, not
+    // on the input's partitioning: pin it to `parts` so the carries
+    // really cross 0, 2 and 16 boundaries (17 slices of ~7 rows: the
+    // depth-11 shifts and the k=9 window each span several of them)
+    val shufflePartitions = "spark.sql.shuffle.partitions"
+    val savedPartitions = spark.conf.get(shufflePartitions)
+    for (parts <- Seq(1, 3, 17)) try {
+      spark.conf.set(shufflePartitions, parts.toString)
       val df = base.repartition(parts)
       val got = {
         val a = ScanFns.withCumsum(df, col("v"), Seq(col("k").asc), "cs")
+        assert(a.rdd.getNumPartitions == parts,
+          s"scan ran on ${a.rdd.getNumPartitions} partitions, wanted $parts")
         val b = ScanFns.withRolling(a, Seq((col("v"), ScanFns.RollSum, "rs")), 9,
           Seq(col("k").asc))
         val c = ScanFns.withFillLast(b, Seq("v"), Seq(col("k").asc))
@@ -566,7 +543,7 @@ class PlanSpec extends SparkTestBase {
           Seq(col("k").asc))
         .orderBy("k").collect().map(r => (3 to 5).map(i => Option(r.get(i)))).toSeq
       assert(gotMix == wantMix, s"fused shifts mismatch at $parts partitions")
-    }
+    } finally spark.conf.set(shufflePartitions, savedPartitions)
   }
 
   test("whole-frame shift plans ONE sort, no join, no window") {

@@ -20,17 +20,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // deterministic physical plans for the plan-shape asserts
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    // AQE off, for deterministic physical plans: the plan-shape asserts
+    // check the static plan, which AQE would re-plan at run time
+    // (coalesced partitions, switched join strategies)
+    GraftSession.local(4, "spark.sql.adaptive.enabled" -> "false")
 }
